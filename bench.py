@@ -223,11 +223,9 @@ def run_scaling(sf: float) -> dict:
 # round-4 iterative additions (dedup_components_bigstar,
 # dedup_cluster_keep_best) — all iterative or multi-stage
 # (persist/unpersist pressure), so their scaling behavior is not
-# predicted by the flagship's single-pass pipeline. Components runs as
-# the PRODUCTION bigstar variant: the inflated scaling corpus creates
-# near-dup chains whose diameter exceeds the fixed-round query's unroll
-# (its convergence guard raises there — by design; the until-fixpoint
-# variant is exactly what production would run on such a graph).
+# predicted by the flagship's single-pass pipeline. Components runs
+# until fixpoint, so the inflated scaling corpus's long near-dup chains
+# cost rounds, never correctness.
 _HEAVY_QUERIES = (
     "dedup_components_bigstar",
     "dedup_cluster_keep_best",

@@ -371,7 +371,7 @@ def phash_blobs(media: DataFrame) -> DataFrame:
 def phash_neardup_pairs(
     hashes: DataFrame,
     max_hamming: int = 4,
-    n_bands: int = 4,
+    n_bands: int = 8,
 ) -> DataFrame:
     """Near-duplicate image pairs by perceptual-hash distance, with
     LSH-style band bucketing so the candidate set is NEVER all-pairs:

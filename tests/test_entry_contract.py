@@ -1,6 +1,7 @@
 """Replicates the driver's correctness gate locally: every queries() entry
-with an oracle must match DuckDB row-for-row (order-insensitive, columns
-aligned by name) at sf0.001. The driver runs the same at sf0.01."""
+must match its DuckDB oracle row-for-row at sf0.001, after the driver's
+canonicalisation (columns in name order, rows through a pandas
+sort_values over every column). The driver runs the same at sf0.01."""
 
 from __future__ import annotations
 
@@ -10,7 +11,11 @@ import os
 import sys
 
 import duckdb
+import pandas as pd
 import pytest
+from pyspark.sql.types import (
+    ArrayType, LongType, MapType, StringType, StructField, StructType,
+)
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,31 +39,49 @@ def duck():
     return con
 
 
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
+def _cell(v):
+    if isinstance(v, float) and not math.isnan(v):
         return round(v, 9)
     if isinstance(v, datetime.datetime):
         return v.replace(tzinfo=None).isoformat()
     return v
 
 
-def _normalize(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        tuple(_norm(r[i]) for i in order) for r in rows
+def _driver_canonical(rows, cols):
+    """Columns in name order, rows sorted by pandas over every column, as
+    the driver does."""
+    order = sorted(cols)
+    df = pd.DataFrame([tuple(_cell(v) for v in r) for r in rows],
+                      columns=cols)[order]
+    df = df.sort_values(order, ignore_index=True)
+    return [
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+              for v in r)
+        for r in df.itertuples(index=False, name=None)
+    ]
+
+
+def _assert_driver_sortable(name, schema):
+    """The driver's pandas canonicaliser cannot sort array, map or struct
+    cells (it raised 'unhashable type: list' on such a row)."""
+    bad = [f.name for f in schema.fields
+           if isinstance(f.dataType, (ArrayType, MapType, StructType))]
+    assert not bad, (
+        f"{name}: driver-window query returns array/map/struct "
+        f"columns {bad}"
     )
 
 
-ORACLE_NAMES = sorted(entry_mod.oracle_sql())
-ROWS_ONLY = sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql()))
+REGISTRY = entry_mod.REGISTRY
+WINDOW = {q.name for q in REGISTRY if q.in_driver_window}
 
 
-@pytest.mark.parametrize("name", ORACLE_NAMES)
+@pytest.mark.parametrize("name", [q.name for q in REGISTRY])
 def test_query_matches_oracle(spark, duck, name):
     fn = entry_mod.queries()[name]
     df = fn(spark, SF_DIR)
+    if name in WINDOW:
+        _assert_driver_sortable(name, df.schema)
     spark_cols = df.columns
     spark_rows = [tuple(r) for r in df.collect()]
 
@@ -69,13 +92,22 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column mismatch {spark_cols} vs {duck_cols}"
     )
-    got = _normalize(spark_rows, spark_cols)
-    want = _normalize(duck_rows, duck_cols)
+    got = _driver_canonical(spark_rows, spark_cols)
+    want = _driver_canonical(duck_rows, duck_cols)
     assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)} rows"
     diffs = [
         (g, w) for g, w in zip(got, want) if g != w
     ]
     assert not diffs, f"{name}: {len(diffs)} row diffs; first: {diffs[0]}"
+
+
+def test_window_check_rejects_array_columns():
+    schema = StructType([
+        StructField("target", LongType()),
+        StructField("anchors", ArrayType(StringType())),
+    ])
+    with pytest.raises(AssertionError, match="anchors"):
+        _assert_driver_sortable("synthetic", schema)
 
 
 # Queries whose round-2 forms returned 0 rows on both engines (a "pass"
@@ -98,29 +130,16 @@ def test_calibrated_queries_non_vacuous(spark, name):
     assert fn(spark, SF_DIR).count() > 0, f"{name} is vacuous (0 rows)"
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, name):
-    fn = entry_mod.queries()[name]
-    df = fn(spark, SF_DIR)
-    n = df.count()
-    assert n >= 0
-    df.limit(5).collect()  # materializes the plan end-to-end
-
-
 def test_driver_checked_window_is_explicit():
-    """The correctness driver oracles the first DRIVER_CAP registry rows.
-
-    Round 4's window boundary was implicit ("count the first 50") and an
-    insert could silently change which queries the driver checks; pin the
-    window to the explicit DRIVER_CHECKED tuple."""
-    names = list(entry_mod.queries())
-    assert len(entry_mod.DRIVER_CHECKED) == entry_mod.DRIVER_CAP
-    assert tuple(names[: entry_mod.DRIVER_CAP]) == entry_mod.DRIVER_CHECKED
-    assert tuple(names[entry_mod.DRIVER_CAP:]) == entry_mod.LONG_GREEN_TAIL
-    # every driver-checked row must have a full value-hash oracle
-    missing = [n for n in entry_mod.DRIVER_CHECKED
-               if n not in entry_mod.oracle_sql()]
-    assert not missing, f"driver-checked rows without oracle: {missing}"
+    """The correctness driver checks the first DRIVER_CAP rows of
+    queries(); the window is the in_driver_window flag of the registry
+    table, so an insert cannot silently move a query in or out of it."""
+    names = [q.name for q in REGISTRY]
+    assert len(set(names)) == len(names)
+    window = [q.name for q in REGISTRY if q.in_driver_window]
+    assert len(window) == entry_mod.DRIVER_CAP
+    assert list(entry_mod.queries())[: entry_mod.DRIVER_CAP] == window
+    assert list(entry_mod.oracle_sql()) == names
 
 
 def test_entry_smoke(spark):

@@ -225,6 +225,20 @@ def test_phash_neardup_pairs_planted(spark):
     assert pairs == {(k, "v" + k) for k in texts}
 
 
+def test_phash_neardup_pairs_defaults_are_valid(spark):
+    """The default (max_hamming, n_bands) satisfies the function's own
+    pigeonhole guard: a 4-bit neighbour pairs, a 5-bit one does not."""
+    from ocr_spark.operators.multimodal import phash_neardup_pairs
+
+    df = spark.createDataFrame(
+        [("a", 0), ("b", 0b1111), ("c", 0b11111 << 40), ("d", -1)],
+        "media_ref string, phash long",
+    )
+    pairs = {(r["a"], r["b"], r["hamming"])
+             for r in phash_neardup_pairs(df).collect()}
+    assert pairs == {("a", "b", 4)}
+
+
 def test_phash_neardup_rejects_bad_band_config(spark):
     import pytest as _pytest
 
